@@ -42,14 +42,28 @@ this module extends the training-data-pipeline surface (SURVEY §2's
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
-from rustic_witcher_spark.operators.similarity import _round_half_away, cosine, dot
+from rustic_witcher_spark.operators.similarity import (
+    _block_topk,
+    _empty_topk,
+    _live_queries,
+    _round_half_away,
+    cosine,
+    dot,
+    ivf_assign,
+    ivf_centroids,
+)
 
-# persisted layout of <index>/_codebooks (see pq_write_index)
+# persisted layouts of <index>/_codebooks and <index>/_centroids (see
+# pq_write_index)
 CODEBOOK_SCHEMA = "m int, cid int, cvec array<double>"
+CENTROID_SCHEMA = "cid int, cvec array<double>"
 
 
 def _sq_dist(a, b):
@@ -273,8 +287,6 @@ def pq_adc_topk_block(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_map: dict | None = None,
-    cid_col: str | None = None,
 ) -> DataFrame:
     """The registered/scale face of PQ search: true ADC over the codes.
 
@@ -285,7 +297,7 @@ def pq_adc_topk_block(
     a whole Arrow batch of codes with two fancy-index sums — never
     touching float vectors, never shuffling the corpus. Per-batch top-k
     per query (bounded rows out), then one window over the k-per-batch
-    candidates — the brute_force_topk_block reduction shape.
+    candidates — the ``similarity._block_topk`` reduction shape.
 
     Output contract matches :func:`pq_adc_topk` on clean vectors
     (pinned by test): ADC sums per-subspace partials where the HOF twin
@@ -293,210 +305,110 @@ def pq_adc_topk_block(
     float-order near-identical, and both round half-away to 6 dp.
     Dirty-data policy as the other block kernels: NULL / zero-norm /
     NaN queries are dropped at the kernel boundary.
+    """
+    cb = _collect_codebooks(codebooks)
+    live = _live_queries(queries, id_col, vec_col)
+    return _adc_topk(corpus_codes, cb, live, k, n_subspaces, dim, id_col)
 
-    ``probe_map`` (used by the persisted IVF-PQ path): {query_id:
-    iterable of coarse list ids this query probes}; ``cid_col`` names
-    the coarse-list column on ``corpus_codes``. Candidates outside a
+
+def _adc_topk(
+    corpus_codes, cb, live, k, n_subspaces, dim, id_col, probe_map=None, cid_col=None, centroid_rows=None
+) -> DataFrame:
+    """:func:`pq_adc_topk_block` over an already-collected codebook
+    ({(m, code): codeword}) and query set (``_live_queries``).
+
+    ``probe_map`` (the persisted IVF-PQ path): {query_id: iterable of
+    coarse list ids this query probes}; ``cid_col`` names the
+    coarse-list column on ``corpus_codes``. Candidates outside a
     query's probed lists are masked out per-batch — the compute-side
     complement of the partition pruning that already restricted the
     SCAN to the union of probed lists.
-    """
-    import numpy as np
 
-    spark = corpus_codes.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
-    cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb:
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    d_sub = dim // n_subspaces
-    max_cid = max(c for _, c in cb)
-    # dense (m, cid) tables; unused slots stay NaN and can never be
-    # referenced — codes only ever point at surviving codewords
-    n2 = np.full((n_subspaces, max_cid + 1), np.nan)
-    cw = np.full((n_subspaces, max_cid + 1, d_sub), np.nan)
-    for (m, cid), v in cb.items():
-        cw[m, cid] = v
-        n2[m, cid] = float(np.dot(v, v))
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    # LUT: ip[qi, m, cid] = dot(q_m, codeword_{m,cid})
-    lut = np.einsum("qmd,mcd->qmc", q_mat.reshape(len(q_ids), n_subspaces, d_sub), cw)
-    # probe mask: allowed[qi, coarse_cid] — tiny (|queries| x n_lists)
-    allowed = None
-    if probe_map is not None:
-        n_lists = 1 + max((c for cids in probe_map.values() for c in cids), default=0)
-        allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
-        for qi, qid in enumerate(q_ids):
-            for c in probe_map.get(int(qid), ()):
-                allowed[qi, c] = True
-    b = spark.sparkContext.broadcast((q_ids, q_norm, lut, n2, allowed))
-    sel_cols = [id_col, "codes"] + ([cid_col] if cid_col else [])
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, q_norm, lut, n2, allowed = b.value
-        m_idx = np.arange(lut.shape[1])
-        for pdf in batches:
-            pdf = pdf[pdf["codes"].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            ip = lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
-            cnorm = np.sqrt(n2[m_idx, codes].sum(axis=1))  # [B]
-            sims = _round_half_away(ip / (q_norm[:, None] * cnorm[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if allowed is not None:
-                batch_cids = pdf[cid_col].to_numpy(dtype=np.int64)
-                in_range = batch_cids < allowed.shape[1]
-                mask = np.zeros((len(q_ids), len(batch_cids)), dtype=bool)
-                mask[:, in_range] = allowed[:, batch_cids[in_range]]
-                sims = np.where(mask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
-
-    per_batch = corpus_codes.select(*sel_cols).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def pq_residual_adc_topk_block(
-    corpus_codes: DataFrame,
-    codebooks: DataFrame,
-    centroid_rows: list,
-    queries: DataFrame,
-    k: int = 5,
-    n_subspaces: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_map: dict | None = None,
-    cid_col: str = "cid",
-) -> DataFrame:
-    """ADC over RESIDUAL codes (v̂ = c_cid + recon(codes)): the scoring
-    face of ``pq_write_index(residual=True)``. Everything the score
-    needs beyond the plain ADC tables is per-(cid, m, code) and tiny:
+    ``centroid_rows`` (residual indexes — ``pq_write_index(residual=
+    True)``, requires ``cid_col``): the (cid, cvec) coarse centroids
+    the codes are residuals to, v̂ = c_cid + recon(codes). Everything
+    the score needs beyond the plain ADC tables is per-(cid, m, code)
+    and tiny:
 
         dot(q, v̂)  = t_ip[q, cid]  + Σ_m lut[q, m, code_m]
         |v̂|²       = co_n2[cid]   + 2·Σ_m cross[cid, m, code_m]
                                    + Σ_m n2[m, code_m]
 
-    t_ip (|Q| × lists), cross (lists × m × codes — e.g. 8×16×16
-    doubles), and co_n2 are precomputed driver-side from the collected
-    centroids+codebook and broadcast with the LUT; the kernel adds two
-    fancy-index gathers to the plain ADC sum. Expansion vs the twin's
-    single dot over the reconstructed vector differs only in float
-    grouping — absorbed by the 6-dp half-away rounding, the same
-    contract the raw ADC faces have held since r8. Candidate rows MUST
-    carry ``cid_col`` (a residual code is meaningless without its
-    centroid)."""
+    so the kernel adds two fancy-index gathers to the plain ADC sum.
+    Flat PQ and raw IVF-PQ are the case with no centroid terms (Jégou
+    et al. 2011) and score through the identical float operations.
+    The expansion vs the twin's single dot over the reconstructed
+    vector differs only in float grouping — absorbed by the 6-dp
+    half-away rounding."""
     import numpy as np
 
-    spark = corpus_codes.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
-    cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb or not centroid_rows:
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    if not cb:
+        return _empty_topk(corpus_codes.sparkSession)
     d_sub = dim // n_subspaces
     max_code = max(c for _, c in cb)
+    # dense (m, code) tables; unused slots stay NaN and can never be
+    # referenced — codes only ever point at surviving codewords
     n2 = np.full((n_subspaces, max_code + 1), np.nan)
     cw = np.full((n_subspaces, max_code + 1, d_sub), np.nan)
-    for (m, cid), v in cb.items():
-        cw[m, cid] = v
-        n2[m, cid] = float(np.dot(v, v))
-    crows = sorted(centroid_rows, key=lambda r: int(r["cid"]))
-    max_ccid = max(int(r["cid"]) for r in crows)
-    co = np.full((max_ccid + 1, dim), np.nan)
-    for r in crows:
-        co[int(r["cid"])] = np.asarray(r["cvec"], dtype=np.float64)
-    present = ~np.isnan(co[:, 0])
-    co_n2 = np.einsum("cd,cd->c", np.nan_to_num(co), np.nan_to_num(co))
-    co_n2 = np.where(present, co_n2, np.nan)  # absent cids stay NaN
-    # cross[cid, m, code] = dot(centroid subvector m, codeword)
-    co_sub = np.nan_to_num(co).reshape(max_ccid + 1, n_subspaces, d_sub)
-    cross = np.einsum("cmd,mkd->cmk", co_sub, np.nan_to_num(cw))
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    lut = np.einsum("qmd,mcd->qmc", q_mat.reshape(len(q_ids), n_subspaces, d_sub), cw)
-    t_ip = q_mat @ np.nan_to_num(co).T  # [Q, lists]
-    allowed = None
-    if probe_map is not None:
-        n_lists = 1 + max([max_ccid] + [c for cids in probe_map.values() for c in cids])
-        allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
-        for qi, qid in enumerate(q_ids):
-            for c in probe_map.get(int(qid), ()):
-                allowed[qi, c] = True
-    b = spark.sparkContext.broadcast((q_ids, q_norm, lut, n2, t_ip, co_n2, cross, allowed))
+    for (m, c), v in cb.items():
+        cw[m, c] = v
+        n2[m, c] = float(np.dot(v, v))
+    co = None
+    if centroid_rows:
+        co = np.full((1 + max(int(r["cid"]) for r in centroid_rows), dim), np.nan)
+        for r in centroid_rows:
+            co[int(r["cid"])] = np.asarray(r["cvec"], dtype=np.float64)
+        present = ~np.isnan(co[:, 0])
+        co = np.nan_to_num(co)
+        co_n2 = np.where(present, np.einsum("cd,cd->c", co, co), np.nan)  # absent cids stay NaN
+        # cross[cid, m, code] = dot(centroid subvector m, codeword)
+        cross = np.einsum("cmd,mkd->cmk", co.reshape(len(co), n_subspaces, d_sub), np.nan_to_num(cw))
 
-    def score(batches):
-        import pandas as pd
+    def tables(q_ids, q_mat, q_norm):
+        lut = np.einsum("qmd,mcd->qmc", q_mat.reshape(len(q_ids), n_subspaces, d_sub), cw)
+        # probe mask: allowed[qi, coarse_cid] — tiny (|queries| x n_lists)
+        allowed = None
+        if probe_map is not None:
+            n_lists = 1 + max((c for cids in probe_map.values() for c in cids), default=0)
+            allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
+            for qi, qid in enumerate(q_ids):
+                allowed[qi, list(probe_map.get(int(qid), ()))] = True
+        residual = None if co is None else (q_mat @ co.T, co_n2, cross)  # t_ip: [Q, lists]
+        return q_norm, lut, n2, allowed, residual
 
-        q_ids, q_norm, lut, n2, t_ip, co_n2, cross, allowed = b.value
+    def batch_sims(tabs, pdf):
+        q_norm, lut, n2, allowed, residual = tabs
+        live_rows = pdf["codes"].notna()
+        if cid_col:
+            live_rows &= pdf[cid_col].notna()
+        pdf = pdf[live_rows]
+        if pdf.empty:
+            return None
+        codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        bc = pdf[cid_col].to_numpy(dtype=np.int64) if cid_col else None
         m_idx = np.arange(lut.shape[1])
-        for pdf in batches:
-            pdf = pdf[pdf["codes"].notna() & pdf[cid_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            bc = pdf[cid_col].to_numpy(dtype=np.int64)
-            ip = t_ip[:, bc] + lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
-            n2tot = (
-                co_n2[bc]
-                + 2.0 * cross[bc[:, None], m_idx[None, :], codes].sum(axis=1)
-                + n2[m_idx, codes].sum(axis=1)
-            )  # [B]
-            sims = _round_half_away(ip / (q_norm[:, None] * np.sqrt(n2tot)[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if allowed is not None:
-                in_range = bc < allowed.shape[1]
-                mask = np.zeros((len(q_ids), len(bc)), dtype=bool)
-                mask[:, in_range] = allowed[:, bc[in_range]]
-                sims = np.where(mask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+        ip = lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
+        cn2 = n2[m_idx, codes].sum(axis=1)  # [B]
+        if residual is not None:
+            t_ip, co_n2, cross = residual
+            ip = t_ip[:, bc] + ip
+            cn2 = co_n2[bc] + 2.0 * cross[bc[:, None], m_idx[None, :], codes].sum(axis=1) + cn2
+        sims = _round_half_away(ip / (q_norm[:, None] * np.sqrt(cn2)[None, :]))
+        if allowed is not None:
+            in_range = bc < allowed.shape[1]
+            mask = np.zeros(sims.shape, dtype=bool)
+            mask[:, in_range] = allowed[:, bc[in_range]]
+            sims = np.where(mask, sims, -np.inf)
+        return pdf[id_col].to_numpy(dtype=np.int64), sims
 
-    per_batch = corpus_codes.select(id_col, "codes", cid_col).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cand = corpus_codes.select(id_col, "codes", *([cid_col] if cid_col else []))
+    return _block_topk(cand, live, k, tables, batch_sims)
 
 
 INDEX_META_NAME = "_index_meta.json"
 
 
 def _write_index_meta(path: str, meta: dict) -> None:
-    import json
-    import os
-
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, INDEX_META_NAME + ".tmp")
     with open(tmp, "w") as fh:
@@ -507,9 +419,6 @@ def _write_index_meta(path: str, meta: dict) -> None:
 def read_index_meta(path: str) -> dict:
     """Index-level metadata ({} for pre-r10 indexes — absence means a
     plain raw-vector quantization, so old layouts keep working)."""
-    import json
-    import os
-
     p = os.path.join(path, INDEX_META_NAME)
     if not os.path.exists(p):
         return {}
@@ -534,8 +443,6 @@ def residual_frame(
     The subtraction is ELEMENTWISE (zip_with) — no accumulation, so
     the DuckDB twin's list_transform(i -> v[i] − c[i]) is bit-exact.
     NULL vectors drop at the ivf_assign choke point (r9 convention)."""
-    from rustic_witcher_spark.operators.similarity import ivf_assign
-
     assign = ivf_assign(corpus, centroids, id_col, vec_col, nprobe=1).select(id_col, "cid")
     cvt = centroids.select("cid", "cvec")
     return (
@@ -544,6 +451,56 @@ def residual_frame(
         .join(F.broadcast(cvt), "cid")
         .select(id_col, "cid", F.zip_with("__v", "cvec", lambda a, b: a - b).alias("rv"))
     )
+
+
+def codes_schema(id_col: str, with_cid: bool) -> str:
+    """Layout of an index's codes (base ``<path>/codes`` and streamed
+    deltas alike): (id, codes[, cid]) — cid only on IVF indexes."""
+    return f"{id_col} long, codes array<int>" + (", cid int" if with_cid else "")
+
+
+def index_is_ivf(path: str) -> bool:
+    """An index is IVF (codes carry a coarse ``cid``) iff it persisted
+    coarse centroids."""
+    return os.path.isdir(f"{path}/_centroids")
+
+
+def centroids_df(spark, path: str) -> DataFrame | None:
+    """The persisted coarse centroids (explicit schema — an empty
+    index dir holds only _SUCCESS, and inference would raise); None
+    for a flat index. No Spark job."""
+    if not index_is_ivf(path):
+        return None
+    return spark.read.schema(CENTROID_SCHEMA).parquet(f"{path}/_centroids")
+
+
+def pq_encode_for_index(
+    frame: DataFrame,
+    codebooks: DataFrame,
+    n_subspaces: int,
+    dim: int,
+    centroids: DataFrame | None = None,
+    residual: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Encode ``frame``'s vectors the way an index stores them: (id,
+    codes) for flat PQ (``centroids`` None), (id, codes, cid) for IVF —
+    raw codes of v plus v's nearest coarse list, or with ``residual``
+    the codes of v − c_cid. The ONE place that decides a vector's index
+    encoding: the index build and the streaming appender both call it,
+    so a delta encodes exactly like a batch re-index under the same
+    frozen quantizers."""
+    if centroids is None:
+        return pq_encode(frame, codebooks, n_subspaces, dim, id_col, vec_col)
+    if residual:
+        res = residual_frame(frame, centroids, id_col, vec_col)
+        lists = res.select(id_col, "cid")
+        codes = pq_encode(res, codebooks, n_subspaces, dim, id_col, "rv")
+    else:
+        lists = ivf_assign(frame, centroids, id_col, vec_col, nprobe=1).select(id_col, "cid")
+        codes = pq_encode(frame, codebooks, n_subspaces, dim, id_col, vec_col)
+    return codes.join(lists, id_col)
 
 
 def pq_write_index(
@@ -582,43 +539,33 @@ def pq_write_index(
     identical plus an ``_index_meta.json`` {"residual": true} marker;
     readers without the marker treat the index as raw (pre-r10
     layouts keep working).
+
+    Centroids and codebook are each written, then READ BACK (parquet
+    round-trips doubles losslessly) before anything downstream uses
+    them: keeps the Lloyd pipelines out of the encode lineage, so each
+    training runs once, not once per downstream job.
     """
+    if residual and coarse_clusters <= 0:
+        raise ValueError("residual=True requires coarse_clusters > 0")
     spark = corpus.sparkSession
-    if residual:
-        if coarse_clusters <= 0:
-            raise ValueError("residual=True requires coarse_clusters > 0")
-        from rustic_witcher_spark.operators.similarity import ivf_centroids
-
-        cent = ivf_centroids(corpus, coarse_clusters, id_col, vec_col, seed=seed, iters=iters)
-        cent.write.mode("overwrite").parquet(f"{path}/_centroids")
-        cent = spark.read.schema("cid int, cvec array<double>").parquet(f"{path}/_centroids")
-        res = residual_frame(corpus, cent, id_col, vec_col)
-        cb = pq_codebooks(res, n_subspaces, n_codes, dim, id_col, "rv", seed, iters)
-        cb.write.mode("overwrite").parquet(f"{path}/_codebooks")
-        cb = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/_codebooks")
-        codes = pq_encode(res, cb, n_subspaces, dim, id_col, "rv")
-        codes.join(res.select(id_col, "cid"), id_col).write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(f"{path}/codes")
-        _write_index_meta(path, {"residual": True})
-        return
-    cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
-    cb.write.mode("overwrite").parquet(f"{path}/_codebooks")
-    # encode against the WRITTEN codebook (parquet round-trips doubles
-    # losslessly): keeps the Lloyd pipeline out of the encode lineage,
-    # so training runs once, not once per downstream job
-    cb = corpus.sparkSession.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/_codebooks")
-    codes = pq_encode(corpus, cb, n_subspaces, dim, id_col, vec_col)
+    cent = None
+    train, train_col = corpus, vec_col
     if coarse_clusters > 0:
-        from rustic_witcher_spark.operators.similarity import ivf_assign, ivf_centroids
-
-        cent = ivf_centroids(corpus, coarse_clusters, id_col, vec_col, seed=seed, iters=iters)
-        cent.write.mode("overwrite").parquet(f"{path}/_centroids")
-        lists = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1).select(id_col, "cid")
-        codes.join(lists, id_col).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
-    else:
-        codes.write.mode("overwrite").parquet(f"{path}/codes")
-    _write_index_meta(path, {"residual": False})
+        ivf_centroids(corpus, coarse_clusters, id_col, vec_col, seed=seed, iters=iters).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/_centroids")
+        cent = centroids_df(spark, path)
+        if residual:
+            train, train_col = residual_frame(corpus, cent, id_col, vec_col), "rv"
+    pq_codebooks(train, n_subspaces, n_codes, dim, id_col, train_col, seed, iters).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/_codebooks")
+    codes = pq_encode_for_index(corpus, codebook_df(spark, path), n_subspaces, dim, cent, residual, id_col, vec_col)
+    writer = codes.write.mode("overwrite")
+    if cent is not None:
+        writer = writer.partitionBy("cid")
+    writer.parquet(f"{path}/codes")
+    _write_index_meta(path, {"residual": residual})
 
 
 def codebook_df(spark, path: str) -> DataFrame:
@@ -666,67 +613,45 @@ def pq_query_index(
     the right trade for small deltas).
 
     IVF-PQ (``_centroids`` present): queries are assigned their
-    ``nprobe`` nearest coarse lists; the codes scan carries a
-    ``cid IN (...)`` partition filter (only the probed lists' files
-    open), and the kernel masks each query to ITS OWN probed lists —
-    scan pruning and compute pruning from one probe assignment. Flat
-    PQ: full codes scan, ADC against every candidate.
+    ``nprobe`` nearest coarse lists driver-side, from the query rows
+    the kernel collects anyway (``_probe_assign_local`` — no
+    probe-assignment job; the centroid collect remains); the codes
+    scan carries a ``cid IN (...)`` partition filter (only the probed
+    lists' files open), and the kernel masks
+    each query to ITS OWN probed lists — scan pruning and compute
+    pruning from one probe assignment. The same collected centroid
+    rows feed a residual index's centroid terms. Flat PQ: full codes
+    scan, ADC against every candidate.
 
-    Driver-side collects are bounded: the codebook (KBs) and the
-    |queries| x nprobe probe assignment.
+    Driver-side collects are bounded: the codebook (KBs), the
+    centroids (lists x dim) and the query set.
     """
-    import os
-
     # Geometry inference costs an agg+collect Spark job — run it ONLY
     # when the caller didn't supply the geometry (query loops pass it).
     if n_subspaces is None or dim is None:
         cb, inferred_m, inferred_dim = codebook_geometry(spark, path)
         if inferred_m == 0:  # empty codebook -> empty index -> empty result
-            return spark.createDataFrame([], "query_id long, neighbor_id long, sim double, rank int")
+            return _empty_topk(spark)
         n_subspaces = n_subspaces or inferred_m
         # per-subspace width from the stored codebook, scaled by the
         # CALLER's n_subspaces when one was supplied
         dim = dim or n_subspaces * (inferred_dim // inferred_m)
     else:
         cb = codebook_df(spark, path)
-    probe_map = None
-    cid_col = None
-    if os.path.isdir(f"{path}/_centroids"):
-        from rustic_witcher_spark.operators.similarity import ivf_assign
-
-        cent = spark.read.parquet(f"{path}/_centroids")
-        probes = (
-            ivf_assign(queries.filter(F.col(vec_col).isNotNull()), cent, id_col, vec_col, nprobe=nprobe)
-            .select(F.col(id_col), F.col("cid"))
-            .collect()
-        )
-        probe_map = {}
-        for r in probes:
-            probe_map.setdefault(int(r[id_col]), []).append(int(r["cid"]))
-        probe_cids = sorted({c for cids in probe_map.values() for c in cids})
-        codes = (
-            spark.read.schema(f"{id_col} long, codes array<int>, cid int")
-            .parquet(f"{path}/codes")
-            .filter(F.col("cid").isin(probe_cids))
-        )
-        cid_col = "cid"
-    else:
-        codes = spark.read.schema(f"{id_col} long, codes array<int>").parquet(f"{path}/codes")
+    cb = _collect_codebooks(cb)
+    live = _live_queries(queries, id_col, vec_col)
+    cent = centroids_df(spark, path)
+    codes = spark.read.schema(codes_schema(id_col, cent is not None)).parquet(f"{path}/codes")
     for extra in extra_codes or []:
-        extra = extra.select(id_col, "codes", *([cid_col] if cid_col else []))
-        if cid_col:
-            extra = extra.filter(F.col(cid_col).isin(probe_cids))
-        codes = codes.select(*extra.columns).unionByName(extra)
-    if index_is_residual(path):
-        # residual index (always IVF — write enforces coarse_clusters>0):
-        # score codes + centroid through the residual ADC kernel
-        return pq_residual_adc_topk_block(
-            codes, cb, cent.collect(), queries, k, n_subspaces, dim,
-            id_col, vec_col, probe_map=probe_map, cid_col=cid_col,
-        )
-    return pq_adc_topk_block(
-        codes, cb, queries, k, n_subspaces, dim, id_col, vec_col, probe_map=probe_map, cid_col=cid_col
-    )
+        codes = codes.unionByName(extra.select(*codes.columns))
+    crows = probe_map = cid_col = None
+    if cent is not None:
+        crows = cent.collect()
+        probe_map = _probe_assign_local(live[0], live[1], crows, nprobe)
+        codes = codes.filter(F.col("cid").isin(sorted({c for cids in probe_map.values() for c in cids})))
+        cid_col = "cid"
+    residual_rows = crows if index_is_residual(path) else None
+    return _adc_topk(codes, cb, live, k, n_subspaces, dim, id_col, probe_map, cid_col, residual_rows)
 
 
 def pq_encode_adc_topk_block(
@@ -738,8 +663,6 @@ def pq_encode_adc_topk_block(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    probe_map: dict | None = None,
 ) -> DataFrame:
     """Encode + ADC FUSED into one kernel pass over the raw vectors —
     the one-shot search path (no materialized codes): assigns each
@@ -754,9 +677,19 @@ def pq_encode_adc_topk_block(
     list_dot_product — and np.argmin over ascending-cid columns
     reproduces the min(struct(d, cid)) tie-break. (A BLAS matmul here
     could re-associate the sum and flip a near-tie assignment.)
+    """
+    cb = _collect_codebooks(codebooks)
+    live = _live_queries(queries, id_col, vec_col)
+    return _encode_adc_topk(corpus, cb, live, k, n_subspaces, dim, id_col, vec_col)
 
-    ``centroids`` + ``probe_map`` fuse the IVF COARSE stage into the
-    same pass (the one-shot ivfpq_topk path): each corpus row's coarse
+
+def _encode_adc_topk(corpus, cb, live, k, n_subspaces, dim, id_col, vec_col, crows=(), probe_map=None) -> DataFrame:
+    """:func:`pq_encode_adc_topk_block` over an already-collected
+    codebook and query set (``_live_queries``).
+
+    ``crows`` (the collected (cid, cvec) centroid rows) + ``probe_map``
+    fuse the IVF COARSE stage into the same pass (the one-shot
+    ivfpq_topk path): each corpus row's coarse
     cid is computed in-kernel — full-dim cosine vs the (tiny) centroid
     table with the SAME left-assoc accumulation, argmax over
     ascending-cid columns reproducing ivf_assign's desc-sim/asc-cid
@@ -769,141 +702,105 @@ def pq_encode_adc_topk_block(
     """
     import numpy as np
 
-    spark = corpus.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
-    cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb:
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    if not cb:
+        return _empty_topk(corpus.sparkSession)
     d_sub = dim // n_subspaces
     # per-subspace codeword tables in ASCENDING cid order (argmin ->
     # first minimum -> smallest cid, matching min(struct) ties)
-    cids_m, cw_m, cv2_m = [], [], []
+    cw_m, cv2_m = [], []
     for m in range(n_subspaces):
-        items = sorted((cid, v) for (mm, cid), v in cb.items() if mm == m)
-        cids = np.array([c for c, _ in items], dtype=np.int64)
-        mat = np.stack([v for _, v in items])
+        mat = np.stack([v for _, v in sorted((cid, v) for (mm, cid), v in cb.items() if mm == m)])
         cv2 = mat[:, 0] * mat[:, 0]
         for i in range(1, d_sub):
             cv2 = cv2 + mat[:, i] * mat[:, i]
-        cids_m.append(cids)
         cw_m.append(mat)
         cv2_m.append(cv2)
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    # ADC lookup tables against the (sorted) per-subspace codewords
-    lut_m = [
-        np.einsum("qd,cd->qc", q_mat[:, m * d_sub : (m + 1) * d_sub], cw_m[m])
-        for m in range(n_subspaces)
-    ]
-    coarse = None
-    if centroids is not None:
-        crows = sorted(centroids.collect(), key=lambda r: int(r["cid"]))
-        if not crows:  # empty corpus → no lists; unreachable when cb is
-            crows = None  # non-empty, but guard the stack() anyway
-    if centroids is not None and crows:
-        co_cids = np.array([int(r["cid"]) for r in crows], dtype=np.int64)
-        co_mat = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in crows])
-        # left-assoc centroid norms in dimension order (ivf_assign's
-        # l2_norm fold sequence)
-        co_n2 = co_mat[:, 0] * co_mat[:, 0]
-        for i in range(1, co_mat.shape[1]):
-            co_n2 = co_n2 + co_mat[:, i] * co_mat[:, i]
-        co_norm = np.sqrt(co_n2)
-        # allowed[qi, col] over the ASCENDING-cid centroid columns;
-        # kept_cols = union of every query's probed lists
-        allowed = np.zeros((len(q_ids), len(co_cids)), dtype=bool)
-        col_of = {int(c): j for j, c in enumerate(co_cids)}
-        if probe_map is not None:
-            for qi, qid in enumerate(q_ids):
-                for c in probe_map.get(int(qid), ()):
-                    if c in col_of:
-                        allowed[qi, col_of[c]] = True
-        else:
-            allowed[:, :] = True
-        coarse = (co_mat, co_norm, allowed)
-    b = spark.sparkContext.broadcast((q_ids, q_norm, cids_m, cw_m, cv2_m, lut_m, coarse))
+    crows = sorted(crows, key=lambda r: int(r["cid"]))
 
-    def score(batches):
-        import pandas as pd
+    def tables(q_ids, q_mat, q_norm):
+        # ADC lookup tables against the (sorted) per-subspace codewords
+        lut_m = [
+            np.einsum("qd,cd->qc", q_mat[:, m * d_sub : (m + 1) * d_sub], cw_m[m])
+            for m in range(n_subspaces)
+        ]
+        coarse = None
+        if crows:  # an empty corpus trains no centroids (unreachable while cb is non-empty)
+            co_mat = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in crows])
+            # left-assoc centroid norms in dimension order (ivf_assign's
+            # l2_norm fold sequence)
+            co_n2 = co_mat[:, 0] * co_mat[:, 0]
+            for i in range(1, co_mat.shape[1]):
+                co_n2 = co_n2 + co_mat[:, i] * co_mat[:, i]
+            # allowed[qi, col] over the ASCENDING-cid centroid columns;
+            # kept_cols = union of every query's probed lists
+            allowed = np.zeros((len(q_ids), len(crows)), dtype=bool)
+            col_of = {int(r["cid"]): j for j, r in enumerate(crows)}
+            if probe_map is not None:
+                for qi, qid in enumerate(q_ids):
+                    allowed[qi, [col_of[c] for c in probe_map.get(int(qid), ()) if c in col_of]] = True
+            else:
+                allowed[:, :] = True
+            coarse = (co_mat, np.sqrt(co_n2), allowed)
+        return q_norm, cw_m, cv2_m, lut_m, coarse
 
-        q_ids, q_norm, cids_m, cw_m, cv2_m, lut_m, coarse = b.value
-        n_sub = len(cw_m)
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            qmask = None  # [Q, B] allowed pairs (coarse probe masking)
-            if coarse is not None:
-                co_mat, co_norm, allowed = coarse
-                # in-kernel coarse assign: cosine vs centroids with the
-                # exact left-assoc fold of similarity.cosine, argmax
-                # over ascending-cid columns = desc-sim/asc-cid ties
-                ip = vecs[:, 0][:, None] * co_mat[:, 0][None, :]
-                v2 = vecs[:, 0] * vecs[:, 0]
-                for i in range(1, vecs.shape[1]):
-                    ip = ip + vecs[:, i][:, None] * co_mat[:, i][None, :]
-                    v2 = v2 + vecs[:, i] * vecs[:, i]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    csim = ip / (np.sqrt(v2)[:, None] * co_norm[None, :])
-                # a zero-norm centroid (collapsed Lloyd mean) yields a
-                # NaN column; argmax would keep it only at column 0,
-                # while the relational ivf_assign/try_divide path sorts
-                # NULL sims last — mask to -inf so both faces pick the
-                # best REAL centroid (ADVICE r9; theoretical unless a
-                # mean collapses to the exact zero vector)
-                csim = np.where(np.isnan(csim), -np.inf, csim)
-                col = np.argmax(csim, axis=1)  # first max = smallest cid
-                keep_rows = allowed.any(axis=0)[col]
-                if not keep_rows.any():
-                    continue
-                c_ids, vecs, col = c_ids[keep_rows], vecs[keep_rows], col[keep_rows]
-                qmask = allowed[:, col]  # [Q, B]
-            ip_sum = None
-            n2_sum = None
-            for m in range(n_sub):
-                sv = vecs[:, m * d_sub : (m + 1) * d_sub]
-                cw = cw_m[m]
-                # left-assoc accumulation in dimension order — the
-                # exact float sequence of the unrolled Spark expression
-                sv2 = sv[:, 0] * sv[:, 0]
-                ip = sv[:, 0][:, None] * cw[:, 0][None, :]
-                for i in range(1, sv.shape[1]):
-                    sv2 = sv2 + sv[:, i] * sv[:, i]
-                    ip = ip + sv[:, i][:, None] * cw[:, i][None, :]
-                d = (sv2[:, None] - 2.0 * ip) + cv2_m[m][None, :]
-                win = np.argmin(d, axis=1)  # first min = smallest cid
-                part_ip = lut_m[m][:, win]  # [Q, B]
-                part_n2 = cv2_m[m][win]  # [B]
-                ip_sum = part_ip if ip_sum is None else ip_sum + part_ip
-                n2_sum = part_n2 if n2_sum is None else n2_sum + part_n2
-            sims = _round_half_away(ip_sum / (q_norm[:, None] * np.sqrt(n2_sum)[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if qmask is not None:
-                sims = np.where(qmask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+    def batch_sims(tabs, pdf):
+        q_norm, cw_m, cv2_m, lut_m, coarse = tabs
+        pdf = pdf[pdf[vec_col].notna()]
+        if pdf.empty:
+            return None
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        qmask = None  # [Q, B] allowed pairs (coarse probe masking)
+        if coarse is not None:
+            co_mat, co_norm, allowed = coarse
+            # in-kernel coarse assign: cosine vs centroids with the
+            # exact left-assoc fold of similarity.cosine, argmax
+            # over ascending-cid columns = desc-sim/asc-cid ties
+            ip = vecs[:, 0][:, None] * co_mat[:, 0][None, :]
+            v2 = vecs[:, 0] * vecs[:, 0]
+            for i in range(1, vecs.shape[1]):
+                ip = ip + vecs[:, i][:, None] * co_mat[:, i][None, :]
+                v2 = v2 + vecs[:, i] * vecs[:, i]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                csim = ip / (np.sqrt(v2)[:, None] * co_norm[None, :])
+            # a zero-norm centroid (collapsed Lloyd mean) yields a
+            # NaN column; argmax would keep it only at column 0,
+            # while the relational ivf_assign/try_divide path sorts
+            # NULL sims last — mask to -inf so both faces pick the
+            # best REAL centroid (ADVICE r9; theoretical unless a
+            # mean collapses to the exact zero vector)
+            csim = np.where(np.isnan(csim), -np.inf, csim)
+            col = np.argmax(csim, axis=1)  # first max = smallest cid
+            keep_rows = allowed.any(axis=0)[col]
+            if not keep_rows.any():
+                return None
+            c_ids, vecs, col = c_ids[keep_rows], vecs[keep_rows], col[keep_rows]
+            qmask = allowed[:, col]  # [Q, B]
+        ip_sum = None
+        n2_sum = None
+        for m in range(len(cw_m)):
+            sv = vecs[:, m * d_sub : (m + 1) * d_sub]
+            cw = cw_m[m]
+            # left-assoc accumulation in dimension order — the
+            # exact float sequence of the unrolled Spark expression
+            sv2 = sv[:, 0] * sv[:, 0]
+            ip = sv[:, 0][:, None] * cw[:, 0][None, :]
+            for i in range(1, sv.shape[1]):
+                sv2 = sv2 + sv[:, i] * sv[:, i]
+                ip = ip + sv[:, i][:, None] * cw[:, i][None, :]
+            d = (sv2[:, None] - 2.0 * ip) + cv2_m[m][None, :]
+            win = np.argmin(d, axis=1)  # first min = smallest cid
+            part_ip = lut_m[m][:, win]  # [Q, B]
+            part_n2 = cv2_m[m][win]  # [B]
+            ip_sum = part_ip if ip_sum is None else ip_sum + part_ip
+            n2_sum = part_n2 if n2_sum is None else n2_sum + part_n2
+        sims = _round_half_away(ip_sum / (q_norm[:, None] * np.sqrt(n2_sum)[None, :]))
+        if qmask is not None:
+            sims = np.where(qmask, sims, -np.inf)
+        return c_ids, sims
 
-    per_batch = corpus.filter(F.col(vec_col).isNotNull()).select(
-        id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cand = corpus.filter(F.col(vec_col).isNotNull()).select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+    return _block_topk(cand, live, k, tables, batch_sims)
 
 
 def pq_topk(
@@ -971,32 +868,28 @@ def ivfpq_topk(
     keeps the relational assign: it pays it once at index BUILD and
     buys parquet partition pruning at every query.
     """
-    from rustic_witcher_spark.operators.similarity import ivf_centroids
-
     cent = _localize(ivf_centroids(corpus, n_clusters, id_col, vec_col, seed=seed, iters=iters))
     cb = _localize(pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters))
     # probe assignment DRIVER-SIDE: the query set is bounded (it is
     # collected for the LUTs anyway) and the centroids are local rows —
     # spinning a Spark job (crossJoin + window) for |Q| rows costs a
-    # whole job floor per run. Same left-assoc cosine fold and
-    # desc-sim/asc-cid tie-break as ivf_assign / the oracle's probe CTE.
-    probe_map = _probe_assign_local(
-        queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).collect(),
-        cent.collect(), nprobe, id_col, vec_col,
-    )
-    return pq_encode_adc_topk_block(
-        corpus, cb, queries, k, n_subspaces, dim, id_col, vec_col,
-        centroids=cent, probe_map=probe_map,
+    # whole job floor per run
+    live = _live_queries(queries, id_col, vec_col)
+    crows = cent.collect()
+    probe_map = _probe_assign_local(live[0], live[1], crows, nprobe)
+    return _encode_adc_topk(
+        corpus, _collect_codebooks(cb), live, k, n_subspaces, dim, id_col, vec_col, crows, probe_map
     )
 
 
-def _probe_assign_local(qrows, crows, nprobe: int, id_col: str, vec_col: str) -> dict[int, list[int]]:
-    """Driver-side twin of ivf_assign for a COLLECTED query set:
-    cosine via the identical left-assoc fold, top-nprobe by
-    (sim desc, cid asc) — bit-for-bit the relational assignment."""
+def _probe_assign_local(q_ids, q_mat, crows, nprobe: int) -> dict[int, list[int]]:
+    """Driver-side twin of ivf_assign for a COLLECTED query set
+    (``_live_queries``' ids and matrix): cosine via the identical
+    left-assoc fold, top-nprobe by (sim desc, cid asc) — bit-for-bit
+    the relational assignment (and the oracle's probe CTE)."""
     import numpy as np
 
-    if not crows or not qrows:
+    if not crows or not len(q_ids):
         # empty corpus trains no centroids (and/or no live queries):
         # nothing to probe — the kernel's empty-codebook early return
         # makes the whole search empty downstream
@@ -1009,19 +902,22 @@ def _probe_assign_local(qrows, crows, nprobe: int, id_col: str, vec_col: str) ->
         cn2 = cn2 + cmat[:, i] * cmat[:, i]
     cnorm = np.sqrt(cn2)
     out: dict[int, list[int]] = {}
-    for r in qrows:
-        v = np.asarray(r[vec_col], dtype=np.float64)
+    for qid, v in zip(q_ids, q_mat):
         ip = v[0] * cmat[:, 0]
         v2 = v[0] * v[0]
         for i in range(1, len(v)):
             ip = ip + v[i] * cmat[:, i]
             v2 = v2 + v[i] * v[i]
+        den = np.sqrt(v2) * cnorm
         with np.errstate(divide="ignore", invalid="ignore"):
-            sim = ip / (np.sqrt(v2) * cnorm)
-        # sort by (sim desc, cid asc); NaN ranks above +inf like Spark
-        key = np.where(np.isnan(sim), np.inf, sim)
+            sim = ip / den
+        # sort by (sim desc, cid asc). A zero denominator (zero-norm
+        # centroid) is cosine's try_divide NULL, which sorts LAST under
+        # DESC in Spark and DuckDB; a NaN sim (NaN component) ranks
+        # above +inf like Spark's NaN-is-greatest ordering
+        key = np.where(den == 0, -np.inf, np.where(np.isnan(sim), np.inf, sim))
         order = sorted(range(len(cids)), key=lambda j: (-key[j], cids[j]))[:nprobe]
-        out[int(r[id_col])] = [cids[j] for j in order]
+        out[int(qid)] = [cids[j] for j in order]
     return out
 
 

@@ -707,6 +707,76 @@ def hard_negative_top1_block(
     ).orderBy("query_id")
 
 
+_TOPK_DDL = "query_id long, neighbor_id long, sim double"
+
+
+def _empty_topk(spark) -> DataFrame:
+    """The top-k contract schema with no rows."""
+    return spark.createDataFrame([], _TOPK_DDL + ", rank int")
+
+
+def _live_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """Collect the (bounded) query set as (ids, float64 matrix, norms).
+
+    The block kernels' dirty-data boundary: NULL, zero-norm and
+    NaN-component queries are dropped — a vector with no direction has
+    no neighbors (the HOF twins instead propagate NULL sims ranked last
+    — oracle-pinned — and raise on zero vectors under ANSI)."""
+    import numpy as np
+
+    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
+    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
+    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]]) if len(qpdf) else np.empty((0, 0))
+    q_norm = np.linalg.norm(q_mat, axis=1)
+    keep = np.isfinite(q_norm) & (q_norm > 0.0)
+    return q_ids[keep], q_mat[keep], q_norm[keep]
+
+
+def _block_topk(candidates: DataFrame, live: tuple, k: int, tables, batch_sims) -> DataFrame:
+    """Shared skeleton of the block top-k kernels: (query_id,
+    neighbor_id, sim, rank), self-matches excluded, ties by neighbor id.
+
+    ``live`` is :func:`_live_queries`' output. ``tables(q_ids, q_mat,
+    q_norm)`` builds the kernel's query-side tables, which broadcast
+    ONCE with the query ids (torrent, per-executor — never per-task
+    closure capture). ``batch_sims(tables, pdf)`` scores one Arrow
+    batch of ``candidates`` as (candidate ids, sims [Q, B]), or None
+    when nothing in the batch can score; a -inf / NaN sim never ranks.
+
+    mapInPandas emits the per-batch top-k per query (k·|queries| rows
+    per batch — bounded, never the scored cross product), then one
+    window over the k-per-batch candidates picks the global top-k.
+    The window input is |queries|·k·|batches| rows — orders of
+    magnitude under the |queries|·|corpus| scored set a HOF twin
+    ranks."""
+    import numpy as np
+
+    spark = candidates.sparkSession
+    if not len(live[0]):
+        return _empty_topk(spark)
+    b = spark.sparkContext.broadcast((live[0], tables(*live)))
+
+    def topk(batches):
+        import pandas as pd
+
+        q_ids, tabs = b.value
+        for pdf in batches:
+            scored = batch_sims(tabs, pdf)
+            if scored is None:
+                continue
+            c_ids, sims = scored
+            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
+            order = np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=-1)[:, :k]
+            top = np.take_along_axis(sims, order, axis=1)
+            qi, j = np.nonzero(np.isfinite(top))
+            if len(qi):
+                yield pd.DataFrame({"query_id": q_ids[qi], "neighbor_id": c_ids[order[qi, j]], "sim": top[qi, j]})
+
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    per_batch = candidates.mapInPandas(topk, _TOPK_DDL)
+    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def brute_force_topk_block(
     corpus: DataFrame,
     queries: DataFrame,
@@ -715,71 +785,30 @@ def brute_force_topk_block(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """numpy block-kernel twin of :func:`brute_force_topk` — same
-    output contract on clean vectors (query_id, neighbor_id, sim,
-    rank; self-matches excluded; ties by neighbor id), vectorized for
-    large query sets. Query block broadcast once per executor (torrent,
-    not per-task closure). Dirty-data policy as
+    output contract on clean vectors, vectorized for large query sets
+    (the :func:`_block_topk` reduction shape). Dirty-data policy as
     hard_negative_top1_block: NULL/zero-norm/NaN vectors are dropped
-    at the kernel boundary (the HOF twin instead propagates NULL sims
-    ranked last — oracle-pinned — and raises on zero vectors under
-    ANSI).
-
-    mapInPandas emits the per-batch top-k per query (k·|queries| rows
-    per batch — bounded, never the scored cross product), then one
-    window over the k-per-batch candidates picks the global top-k.
-    The window input is |queries|·k·|batches| rows — orders of
-    magnitude under the |queries|·|corpus| scored set the HOF version
-    ranks."""
+    at the kernel boundary."""
     import numpy as np
 
-    spark = corpus.sparkSession
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    out_ddl = "query_id long, neighbor_id long, sim double"
-    if qpdf.empty:
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids = q_ids[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    # raw vectors + norms, dot/(|q|·|c|) with half-away rounding — same
-    # operation order as the HOF twin and the oracle (see
-    # hard_negative_top1_block)
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat[keep_q], q_norm[keep_q]))
+    def batch_sims(tabs, pdf):
+        q_mat, q_norm = tabs
+        pdf = pdf[pdf[vec_col].notna()]
+        if pdf.empty:
+            return None
+        c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        c_norm = np.linalg.norm(c_mat, axis=1)
+        keep = np.isfinite(c_norm) & (c_norm > 0.0)
+        if not keep.any():
+            return None
+        # raw vectors + norms, dot/(|q|·|c|) with half-away rounding —
+        # same operation order as the HOF twin and the oracle (see
+        # hard_negative_top1_block)
+        sims = _round_half_away((q_mat @ c_mat[keep].T) / (q_norm[:, None] * c_norm[keep][None, :]))
+        return pdf[id_col].to_numpy(dtype=np.int64)[keep], sims
 
-    def score(batches):
-        import pandas as pd
-
-        q_ids, q_mat, q_norm = b_q.value
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            keep = np.isfinite(c_norm) & (c_norm > 0.0)
-            if not keep.any():
-                continue
-            c_ids = c_ids[keep]
-            sims = _round_half_away((q_mat @ c_mat[keep].T) / (q_norm[:, None] * c_norm[keep][None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
-
-    per_batch = corpus.select(id_col, vec_col).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    live = _live_queries(queries, id_col, vec_col)
+    return _block_topk(corpus.select(id_col, vec_col), live, k, lambda q_ids, q_mat, q_norm: (q_mat, q_norm), batch_sims)
 
 
 def exclusion_top1_block(

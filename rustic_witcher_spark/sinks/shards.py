@@ -86,9 +86,22 @@ def write_training_shards(
         "total_rows": sum(s["n_rows"] for s in stats.values()),
         "shards": {str(k): stats[k] for k in sorted(stats)},
     }
-    with open(os.path.join(path, MANIFEST_NAME), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+    store_manifest(path, manifest)
     return manifest
+
+
+def store_manifest(path: str, manifest: dict) -> None:
+    """Write the manifest via tmp + rename: a crash mid-write leaves the
+    previous manifest intact, and a reader (or verify) never sees a
+    half-written file. makedirs: an EMPTY first streamed micro-batch
+    writes no parquet, so the manifest may be the directory's first
+    file."""
+    os.makedirs(path, exist_ok=True)
+    target = os.path.join(path, MANIFEST_NAME)
+    tmp = target + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    os.replace(tmp, target)
 
 
 def verify_training_shards(spark: SparkSession, path: str) -> list[str]:

@@ -51,10 +51,6 @@ def _store_meta(path: str, meta: dict) -> None:
     store_meta(path, META_NAME, meta)
 
 
-def _delta_schema(id_col: str, with_cid: bool) -> str:
-    return f"{id_col} long, codes array<int>" + (", cid int" if with_cid else "")
-
-
 def ann_index_append_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -87,28 +83,10 @@ def ann_index_append_batch(
             f"base index at {base_index_path!r} has an empty codebook — "
             "build it with pq_write_index over a non-empty corpus first"
         )
-    with_cid = os.path.isdir(f"{base_index_path}/_centroids")
-    if pq.index_is_residual(base_index_path):
-        # residual base index: a code is meaningless without its
-        # centroid — encode the batch's RESIDUALS against the frozen
-        # codebook (same frame the index build quantized)
-        cent = spark.read.schema("cid int, cvec array<double>").parquet(
-            f"{base_index_path}/_centroids"
-        )
-        res = pq.residual_frame(batch_df, cent, id_col, vec_col)
-        codes = pq.pq_encode(res, cb, n_subspaces, dim, id_col, "rv").join(
-            res.select(id_col, "cid"), id_col
-        )
-    else:
-        codes = pq.pq_encode(batch_df, cb, n_subspaces, dim, id_col, vec_col)
-        if with_cid:
-            from rustic_witcher_spark.operators.similarity import ivf_assign
-
-            cent = spark.read.parquet(f"{base_index_path}/_centroids")
-            lists = ivf_assign(
-                batch_df.filter(F.col(vec_col).isNotNull()), cent, id_col, vec_col, nprobe=1
-            ).select(id_col, "cid")
-            codes = codes.join(lists, id_col)
+    codes = pq.pq_encode_for_index(
+        batch_df, cb, n_subspaces, dim, pq.centroids_df(spark, base_index_path),
+        pq.index_is_residual(base_index_path), id_col, vec_col,
+    )
     batch_dir = os.path.join(delta_path, "data", f"batch={batch_id}")
     # appended-row count rides the write job as an observed metric —
     # the read-back count() was a whole extra job per micro-batch
@@ -160,8 +138,8 @@ def read_delta_codes(
     (review finding, r9)."""
     from pyspark.sql import Window
 
-    with_cid = os.path.isdir(f"{base_index_path}/_centroids")
-    schema = _delta_schema(id_col, with_cid)
+    with_cid = pq.index_is_ivf(base_index_path)
+    schema = pq.codes_schema(id_col, with_cid)
     data_dir = os.path.join(delta_path, "data")
     if meta is None:
         meta = _load_meta(delta_path)
@@ -219,7 +197,7 @@ def merge_ann_delta(spark, base_index_path: str, delta_path: str, id_col: str = 
     import shutil
 
     meta = _load_meta(delta_path)
-    with_cid = os.path.isdir(f"{base_index_path}/_centroids")
+    with_cid = pq.index_is_ivf(base_index_path)
     # ONE meta snapshot decides the fold set, the cleanup set, and the
     # row accounting: re-reading the meta here could see a cursor a
     # concurrent appender advanced mid-merge, folding a batch the
@@ -230,7 +208,7 @@ def merge_ann_delta(spark, base_index_path: str, delta_path: str, id_col: str = 
     if n_delta == 0:
         return {**meta, "merged_rows": 0}
     base_dir = f"{base_index_path}/codes"
-    base = spark.read.schema(_delta_schema(id_col, with_cid)).parquet(base_dir)
+    base = spark.read.schema(pq.codes_schema(id_col, with_cid)).parquet(base_dir)
     fresh = delta.join(base.select(id_col), id_col, "left_anti")
     merged = base.unionByName(fresh)
     compact_dir = f"{base_index_path}/codes_compact"

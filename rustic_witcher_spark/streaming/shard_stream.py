@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame
 
 from rustic_witcher_spark.operators.packing import training_shards
-from rustic_witcher_spark.sinks.shards import MANIFEST_NAME, _DIGEST_MOD, _shard_stats
+from rustic_witcher_spark.sinks.shards import MANIFEST_NAME, _DIGEST_MOD, _shard_stats, store_manifest
 
 
 def _empty_manifest(id_col: str, n_shards: int, seed: int) -> dict:
@@ -60,18 +60,6 @@ def _load_manifest(path: str, id_col: str, n_shards: int, seed: int) -> dict:
             return json.load(fh)
     except FileNotFoundError:
         return _empty_manifest(id_col, n_shards, seed)
-
-
-def _store_manifest(path: str, manifest: dict) -> None:
-    # tmp + rename: a reader (or verify) never sees a half-written file.
-    # makedirs: an EMPTY first micro-batch writes no parquet, so the
-    # manifest may be the directory's first file (property-test find).
-    os.makedirs(path, exist_ok=True)
-    target = os.path.join(path, MANIFEST_NAME)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, target)
 
 
 def shard_append_batch(batch_df: DataFrame, batch_id: int, id_col: str, n_shards: int, path: str, seed: int = 42) -> bool:
@@ -111,7 +99,7 @@ def shard_append_batch(batch_df: DataFrame, batch_id: int, id_col: str, n_shards
         }
     manifest["total_rows"] = sum(s["n_rows"] for s in manifest["shards"].values())
     manifest["last_batch_id"] = batch_id
-    _store_manifest(path, manifest)
+    store_manifest(path, manifest)
     return bool(batch_stats)
 
 

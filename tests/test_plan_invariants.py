@@ -61,8 +61,8 @@ ARROW_OK = {
     # r10: batch-vs-index media flags (same perceptual-hash kernel as
     # media_near_dups)
     "media_incremental",
-    # r10: residual-ADC scoring kernel over the persisted residual
-    # index (pq.pq_residual_adc_topk_block)
+    # r10: ADC block kernel with the residual centroid terms, over the
+    # persisted residual index (pq._adc_topk, pq_adc_topk_block's body)
     "pq_residual_query",
     # r10: shortlist stage of the two-stage query is pq_index_query's
     # ADC kernel; the exact re-rank itself is pure Catalyst

@@ -167,12 +167,14 @@ def test_indivisible_dim_raises():
 # ---------------------------------------------------------------------------
 
 
-def test_index_full_probe_equals_flat_pq(spark, emb, tmp_path):
+@pytest.mark.parametrize("coarse_clusters", [0, 8])
+def test_index_full_probe_equals_flat_pq(spark, emb, tmp_path, coarse_clusters):
     """With nprobe = n_lists the persisted IVF-PQ path must reproduce
     the one-shot flat PQ result exactly — partition pruning and probe
-    masking are physical optimizations, not semantic changes."""
+    masking are physical optimizations, not semantic changes. The flat
+    persisted index (coarse_clusters=0) is pinned the same way."""
     idx = str(tmp_path / "pqidx")
-    pq.pq_write_index(emb, idx, n_subspaces=8, n_codes=16, dim=64, coarse_clusters=8)
+    pq.pq_write_index(emb, idx, n_subspaces=8, n_codes=16, dim=64, coarse_clusters=coarse_clusters)
     queries = emb.filter(F.col("vec_id") < 5)
     full = pq.pq_query_index(spark, idx, queries, k=5, nprobe=8)
     flat = pq.pq_topk(emb, queries, k=5, n_subspaces=8, n_codes=16, dim=64)
@@ -205,6 +207,28 @@ def test_index_probe_prunes_scan_and_masks_per_query(spark, emb, tmp_path):
     }
     for r in rows:
         assert (r["query_id"], lists[r["neighbor_id"]]) in probes
+
+
+@pytest.mark.parametrize("nprobe", [1, 2, 3])
+def test_local_probe_assign_matches_ivf_assign_with_zero_norm_centroid(spark, emb, nprobe):
+    """The driver-side probe assignment ranks a zero-norm centroid the
+    way ivf_assign does: cosine's try_divide makes its sim NULL, which
+    sorts LAST — it must not take one of the nprobe slots."""
+    from rustic_witcher_spark.operators.similarity import _live_queries, ivf_assign
+
+    real = [r["embedding"] for r in emb.orderBy("vec_id").limit(3).collect()]
+    cent = spark.createDataFrame(
+        [(1, [0.0] * 64)] + [(i + 2, [float(x) for x in v]) for i, v in enumerate(real)],
+        pq.CENTROID_SCHEMA,
+    )
+    queries = emb.filter(F.col("vec_id") < 20)
+    q_ids, q_mat, _ = _live_queries(queries, "vec_id", "embedding")
+    local = pq._probe_assign_local(q_ids, q_mat, cent.collect(), nprobe)
+    relational: dict[int, set[int]] = {}
+    for r in ivf_assign(queries, cent, nprobe=nprobe).select("vec_id", "cid").collect():
+        relational.setdefault(r["vec_id"], set()).add(r["cid"])
+    assert local and {q: set(c) for q, c in local.items()} == relational
+    assert all(1 not in c for c in local.values())
 
 
 def test_empty_index_round_trip(spark, tmp_path):

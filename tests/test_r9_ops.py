@@ -138,15 +138,23 @@ def test_ivfpq_recall_floor_vs_brute_force(spark):
     assert captured >= 0.8, f"exact top-5 only {captured:.2f}-captured by IVF-PQ top-30"
 
 
-def test_ivfpq_entry_matches_oracle(spark):
-    from rustic_witcher_spark.queries import q_ivfpq_ann_topk, sql_ivfpq_ann_topk
+@pytest.mark.parametrize(
+    "name",
+    ["pq_ann_topk", "ivfpq_ann_topk", "pq_index_query", "pq_residual_query", "pq_rerank_query", "ann_incremental"],
+)
+def test_ivfpq_entry_matches_oracle(spark, name):
+    """Every PQ entry — one-shot flat and IVF, the persisted flat/raw/
+    residual index queries, the re-rank and the streamed delta — equals
+    its DuckDB twin row-for-row, sims included."""
+    from rustic_witcher_spark.queries import build_registry
 
-    g = q_ivfpq_ann_topk(spark, SF_DIR).toPandas().sort_values(["query_id", "rank"])
+    fn, sql = build_registry()[name]
+    g = fn(spark, SF_DIR).toPandas().sort_values(["query_id", "rank"])
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{SF_DIR}/embeddings.parquet')"
     )
-    w = con.execute(sql_ivfpq_ann_topk()).fetchdf().sort_values(["query_id", "rank"])
+    w = con.execute(sql).fetchdf().sort_values(["query_id", "rank"])
     assert g.astype(str).values.tolist() == w.astype(str).values.tolist()
 
 

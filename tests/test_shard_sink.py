@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.sinks import shards as sh
@@ -26,6 +27,37 @@ def test_write_verify_roundtrip(spark, tmp_path):
     assert sorted(d for d in os.listdir(path) if d.startswith("shard=")) == [
         "shard=0", "shard=1", "shard=2", "shard=3",
     ]
+
+
+def test_torn_manifest_write_never_leaves_partial_json(spark, tmp_path, monkeypatch):
+    """A crash mid-manifest-write (here: json.dump writes part of the
+    file, then raises) must never leave a half-written manifest: the
+    manifest is swapped in by rename, never truncated in place. A
+    crashed full rewrite leaves NO manifest (the overwrite already
+    cleared the directory); a crashed manifest rewrite over intact
+    shards leaves the previous one loading and verifying."""
+    path = str(tmp_path / "out")
+    manifest = os.path.join(path, sh.MANIFEST_NAME)
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj, **kw)[:20])
+        raise OSError("disk full")
+
+    sh.write_training_shards(_docs(spark), "doc_id", 4, path)
+    with monkeypatch.context() as m:
+        m.setattr(sh.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            sh.write_training_shards(_docs(spark), "doc_id", 4, path)
+    assert not os.path.exists(manifest)
+
+    first = sh.write_training_shards(_docs(spark), "doc_id", 4, path)
+    with monkeypatch.context() as m:
+        m.setattr(sh.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            sh.store_manifest(path, {**first, "total_rows": 0})
+    with open(manifest) as fh:
+        assert json.load(fh) == first
+    assert sh.verify_training_shards(spark, path) == []
 
 
 def test_verify_detects_dropped_rows(spark, tmp_path):
